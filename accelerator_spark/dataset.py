@@ -17,6 +17,10 @@ Our mapping (SURVEY.md §1):
                              (one extra agg) and stored in the manifest;
                              Parquet row-group stats additionally give
                              zone-map skipping for free at scan time.
+- column types            -> the Parquet read schema, recorded in the
+                             manifest at write time: every read passes it
+                             to the reader, which then neither lists
+                             footers nor runs a schema-inference job.
 - lines per slice         -> total row count (partition counts are Spark's
                              business; order is preserved by an explicit
                              ``lineno`` column when callers need it,
@@ -29,6 +33,7 @@ ever collects data to the driver (min/max is a 1-row agg).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -37,8 +42,9 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from .identifiers import qcol as _qcol
 
@@ -67,11 +73,12 @@ def _json_safe(v: Any) -> Any:
 # links — accelerator/dataset.py:955-961 — so resolving a years-long
 # chain is O(1)-ish). ``chain_cache`` holds entries for the most recent
 # len(cache) ancestors (path + the metadata chain_df needs: lines,
-# minmax zone maps, and whether df() is a plain parquet read). Every
-# _CHAIN_CHECKPOINT_EVERY-th link is a CHECKPOINT holding its full
-# ancestry (capped at _CHAIN_CACHE_MAX); links in between hold only the
-# suffix back to the last checkpoint, so total metadata stays O(N) per
-# chain (a full list in every manifest would be O(N^2) — review r4).
+# minmax zone maps, whether df() is a plain parquet read, and a digest
+# of the recorded read schema). Every _CHAIN_CHECKPOINT_EVERY-th link
+# is a CHECKPOINT holding its full ancestry (capped at
+# _CHAIN_CACHE_MAX); links in between hold only the suffix back to the
+# last checkpoint, so total metadata stays O(N) per chain (a full list
+# in every manifest would be O(N^2) — review r4).
 # Resolution consumes the tip's suffix, then hops checkpoint to
 # checkpoint: O(1 + depth/_CHAIN_CACHE_MAX) manifest reads. Appending
 # is O(1) at write time except at checkpoints and at the legacy
@@ -81,11 +88,44 @@ def _json_safe(v: Any) -> Any:
 # IMMUTABILITY: cached entries snapshot the ancestor's manifest at
 # write time (the reference's datasets are immutable job outputs).
 # Rewriting an ancestor dataset IN PLACE leaves descendants' cached
-# lines/minmax/plain stale; ``chain()`` re-reads manifests and verifies
-# linkage (self-healing), while ``chain_entries``/``chain_df`` trust
-# the snapshot for speed.
+# lines/minmax/plain/schema digest stale; ``chain()`` re-reads
+# manifests and verifies linkage (self-healing), while
+# ``chain_entries``/``chain_df`` trust the snapshot for speed.
 _CHAIN_CACHE_MAX = 4096
 _CHAIN_CHECKPOINT_EVERY = 64
+
+
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable —
+    the schema Spark's Parquet reader returns for files written from a
+    frame of type ``t`` (the Scala ``StructType.asNullable``)."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType),
+                                       True, f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType),
+                       True)
+    return t
+
+
+def _schema_digest(schema_json: dict | None) -> str | None:
+    """Fixed-size stand-in for a recorded schema in chain-cache entries
+    (the schema itself would be copied into every descendant's cache).
+    Canonical JSON, so equal schemas give equal digests."""
+    if not schema_json:
+        return None
+    canon = json.dumps(schema_json, sort_keys=True, separators=(",", ":"))
+    return hashlib.sha1(canon.encode()).hexdigest()
+
+
+def _reader(spark: SparkSession, schema_json: dict | None) -> DataFrameReader:
+    """Parquet reader bound to a recorded schema; manifests without one
+    (written before schemas were recorded, or hand-built) infer it."""
+    if schema_json:
+        return spark.read.schema(StructType.fromJson(schema_json))
+    return spark.read
 
 
 def _chain_entry(path: str, manifest: dict) -> dict:
@@ -108,6 +148,7 @@ def _chain_entry(path: str, manifest: dict) -> dict:
         "lines": manifest.get("lines", 0),
         "minmax": mm,
         "plain": not (manifest.get("parent") or manifest.get("bucketing")),
+        "schema_sha1": _schema_digest(manifest.get("schema")),
     }
 
 
@@ -259,6 +300,9 @@ class Dataset:
                     aggs.append(F.max(_qcol(f_.name)).alias(f"__max_{f_.name}"))
         obs = Observation()
         df = df.observe(obs, *aggs)
+        # what the Parquet reader will return for these files: recorded
+        # instead of read back (a footer-inference job per write)
+        schema = _as_nullable(df.schema)
 
         data_dir = os.path.join(path, "data")
         # invalidate a pre-existing manifest BEFORE replacing the data:
@@ -270,9 +314,6 @@ class Dataset:
         if os.path.exists(old_manifest):
             os.remove(old_manifest)
         df.write.mode("overwrite").parquet(data_dir)
-
-        spark = df.sparkSession
-        written = spark.read.parquet(data_dir)
         row = obs.get
 
         manifest = {
@@ -283,8 +324,9 @@ class Dataset:
             "filename": filename,
             "hashlabel": hashlabel,
             "previous": previous.path if isinstance(previous, Dataset) else previous,
-            "columns": {f_.name: f_.dataType.simpleString() for f_ in written.schema.fields},
-            "nullable": {f_.name: f_.nullable for f_ in written.schema.fields},
+            "columns": {f_.name: f_.dataType.simpleString() for f_ in schema.fields},
+            "nullable": {f_.name: f_.nullable for f_ in schema.fields},
+            "schema": schema.jsonValue(),
             "lines": row["__lines__"],
             "minmax": {
                 c: [_json_safe(row[f"__min_{c}"]), _json_safe(row[f"__max_{c}"])]
@@ -429,6 +471,7 @@ class Dataset:
                     aggs.append(F.max(_qcol(f_.name)).alias(f"__max_{f_.name}"))
             obs = Observation()
             observed = new_cols.observe(obs, *aggs)
+            ov_schema = _as_nullable(new_cols.schema).jsonValue()
             data_dir = os.path.join(path, "data")
             # see write()/write_bucketed: stale-manifest crash window
             old_manifest = os.path.join(path, MANIFEST_NAME)
@@ -439,8 +482,8 @@ class Dataset:
             # duplicate overlay keys would multiply rows at read time
             # while the manifest claims the parent's line count — refuse
             # (tiny agg over the just-written overlay columns only)
-            spark = new_cols.sparkSession
-            chk = spark.read.parquet(data_dir).agg(
+            chk = _reader(new_cols.sparkSession, ov_schema).parquet(
+                data_dir).agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count_distinct(F.col(key)).alias("nd"),
                 F.count(F.when(F.col(key).isNull(), 1)).alias("nnull"),
@@ -456,7 +499,8 @@ class Dataset:
             new_col_types = {
                 f_.name: f_.dataType.simpleString()
                 for f_ in new_cols.schema.fields if f_.name != key}
-            overlay_meta = {"key": key, "cols": list(new_col_types)}
+            overlay_meta = {"key": key, "cols": list(new_col_types),
+                            "schema": ov_schema}
         shadowed = set(new_col_types) | set(exclude)
         resolved = {c: t for c, t in parent_ds.columns.items()
                     if c not in shadowed}
@@ -547,7 +591,8 @@ class Dataset:
         b = self.manifest.get("bucketing")
         if b:
             return self.register_bucketed(spark)
-        return spark.read.parquet(os.path.join(self.path, "data"))
+        return _reader(spark, self.manifest.get("schema")).parquet(
+            os.path.join(self.path, "data"))
 
     def _overlay_df(self, spark: SparkSession, parent: str) -> DataFrame:
         """Resolve a write_overlay dataset: parent scan + (optional)
@@ -559,7 +604,8 @@ class Dataset:
         cols = [c for c in base.columns if c not in exclude]
         if ov.get("cols"):
             key = ov["key"]
-            o = spark.read.parquet(os.path.join(self.path, "data"))
+            o = _reader(spark, ov.get("schema")).parquet(
+                os.path.join(self.path, "data"))
             shadowed = set(ov["cols"])
             cols = [c for c in cols if c not in shadowed]
             if key not in cols:
@@ -600,8 +646,8 @@ class Dataset:
     def chain_entries(self, length: int = -1,
                       stop_ds: "Dataset | str | None" = None) -> list[dict]:
         """Resolve the ``previous`` chain as lightweight cached entries
-        (path, id, lines, minmax, plain), oldest first, using the
-        manifest chain cache: consume the tip's suffix, then hop
+        (path, id, lines, minmax, plain, schema_sha1), oldest first,
+        using the manifest chain cache: consume the tip's suffix, then hop
         checkpoint to checkpoint — O(1 + depth/_CHAIN_CACHE_MAX)
         manifest reads instead of one per link (reference checkpoints
         the same metadata every 64 links —
@@ -704,16 +750,33 @@ class Dataset:
                        if not _entry_range_skips(e["minmax"], range_filter)]
         if not entries:
             return self.df(spark).limit(0)
-        # plain datasets (no overlay/bucketing) read straight from their
-        # data dir — no manifest load; only non-plain survivors and self
-        # cost a manifest read
-        dfs = [
-            self.df(spark) if e["path"] == self.path
-            else spark.read.parquet(os.path.join(e["path"], "data"))
-            if e["plain"]
-            else Dataset.load(e["path"]).df(spark)
-            for e in entries
-        ]
+        # plain datasets (no overlay/bucketing) with a recorded schema
+        # read as ONE scan per distinct schema over all their data dirs
+        # — no footer inference, no per-link manifest load for the
+        # tip's schema, one load for each other schema. Non-plain links
+        # and links without a recorded schema read one at a time. Parts
+        # keep the chain order of their oldest link.
+        tip = self.manifest.get("schema")
+        tip_sha1 = _schema_digest(tip)
+        # part key: the schema digest of a scanned group, or the index
+        # of a link read on its own
+        parts: dict[str | int, list[str]] = {}
+        for i, e in enumerate(entries):
+            sha1 = e.get("schema_sha1") if e["plain"] else None
+            parts.setdefault(sha1 or i, []).append(e["path"])
+        dfs = []
+        for key, paths in parts.items():
+            if isinstance(key, str):
+                sch = (tip if key == tip_sha1
+                       else Dataset.load(paths[0]).manifest.get("schema"))
+                dfs.append(_reader(spark, sch).parquet(
+                    *(os.path.join(p, "data") for p in paths)))
+            elif paths[0] == self.path:
+                dfs.append(self.df(spark))
+            elif entries[key]["plain"]:
+                dfs.append(spark.read.parquet(os.path.join(paths[0], "data")))
+            else:
+                dfs.append(Dataset.load(paths[0]).df(spark))
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=allow_missing_columns)

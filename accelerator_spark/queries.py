@@ -19,6 +19,7 @@ scan→(broadcast)join→partial-agg shuffle plan with AQE skew handling.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -45,7 +46,6 @@ def _scratch(name: str) -> str:
     global _SCRATCH_ROOT, _SCRATCH_SEQ
     import atexit
     import itertools
-    import os
     import shutil
     import tempfile
 
@@ -86,19 +86,25 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # (guide §5: the driver should do almost no data work; a production
 # catalog serves the schema without touching footers). Metadata only:
 # every byte of table DATA is still read from parquet at execution;
-# the first read of each path still infers. Precondition: a path's
-# schema must not change within a process — holds for the static
-# testdata tables and the per-test mkdtemp fixtures _t ever sees.
-_TABLE_SCHEMAS: dict = {}  # path -> pyspark StructType
+# the first read of each path still infers. An entry holds the path's
+# st_mtime_ns at inference and is used only while it still matches: a
+# path rewritten with a new schema (a regenerated file, or a directory
+# Spark overwrote) re-infers instead of reading its new columns as
+# NULL. A path that cannot be stat'ed is never cached.
+_TABLE_SCHEMAS: dict = {}  # path -> (st_mtime_ns, pyspark StructType)
 
 
 def _read_table(spark: SparkSession, path: str) -> DataFrame:
-    sch = _TABLE_SCHEMAS.get(path)
-    if sch is None:
+    try:
+        mtime = os.stat(path).st_mtime_ns
+    except OSError:
+        return spark.read.parquet(path)
+    hit = _TABLE_SCHEMAS.get(path)
+    if hit is None or hit[0] != mtime:
         df = spark.read.parquet(path)
-        _TABLE_SCHEMAS[path] = df.schema
+        _TABLE_SCHEMAS[path] = (mtime, df.schema)
         return df
-    return spark.read.schema(sch).parquet(path)
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -4815,8 +4821,6 @@ def _stream_events(spark: SparkSession, sf_dir: str,
     _events (nanos-as-long or NTZ -> TIMESTAMP). One definition
     (review r5): the normalization branch was maintained in three
     places and a fix to one would silently miss the streaming gates."""
-    import os
-
     from .streaming.structured import stream_from_directory
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

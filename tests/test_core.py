@@ -163,6 +163,110 @@ def test_chain_schema_evolution(spark, tmp_path):
         ds2.chain_df(spark).collect()  # strict mode: schema mismatch raises
 
 
+def test_manifest_schema_is_the_parquet_read_schema(spark, tmp_path):
+    """Dataset.write records the read schema instead of reading the
+    files back: for non-nullable columns, nested types and awkward
+    column names it must equal what Spark's Parquet reader infers, or
+    every df()/chain_df read would silently change types or NULL out
+    columns."""
+    import datetime
+    import decimal
+
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, BooleanType, DateType, DecimalType,
+        LongType, MapType, StringType, StructField, StructType,
+        TimestampNTZType, TimestampType)
+
+    schema = StructType([
+        StructField("id", LongType(), False),
+        StructField("amount", DecimalType(18, 4), False),
+        StructField("day", DateType(), True),
+        StructField("at", TimestampType(), True),
+        StructField("local at", TimestampNTZType(), True),
+        StructField("raw.bytes", BinaryType(), True),
+        StructField("ok`flag", BooleanType(), False),
+        StructField("tags", ArrayType(StringType(), False), False),
+        StructField("attrs", MapType(StringType(), LongType(), False), True),
+        StructField("nested", StructType([
+            StructField("a", LongType(), False),
+            StructField("b", ArrayType(StringType(), True), True),
+        ]), False),
+    ])
+    row = (1, decimal.Decimal("12.3400"), datetime.date(2024, 1, 2),
+           datetime.datetime(2024, 1, 2, 3, 4, 5),
+           datetime.datetime(2024, 1, 2, 3, 4, 5), b"\x00\x01", True,
+           ["x", "y"], {"k": 7}, (3, ["z", None]))
+    ds = Dataset.write(spark.createDataFrame([row], schema),
+                       str(tmp_path / "wide"))
+    inferred = spark.read.parquet(str(tmp_path / "wide" / "data")).schema
+    m = Dataset.load(ds.path).manifest
+    assert StructType.fromJson(m["schema"]) == inferred
+    assert m["columns"] == {f.name: f.dataType.simpleString()
+                            for f in inferred.fields}
+    assert m["nullable"] == {f.name: f.nullable for f in inferred.fields}
+    back = Dataset.load(ds.path).df(spark)
+    assert back.schema == inferred
+    assert back.collect() == spark.read.parquet(
+        str(tmp_path / "wide" / "data")).collect()
+
+
+def _same_schema_chain(spark, root, n):
+    prev = None
+    for i in range(n):
+        part = spark.range(i * 10, i * 10 + 10).select(
+            F.col("id").alias("k"), (F.col("id") % 3).alias("g"))
+        prev = Dataset.write(part, os.path.join(root, f"b{i}"),
+                             previous=prev)
+    return prev
+
+
+def test_chain_df_is_one_scan_and_starts_no_job(spark, tmp_path):
+    """A chain whose links share one recorded schema reads as ONE
+    Parquet scan over all data dirs, and building the frame (also with
+    range_filter=) starts no Spark job: no per-link footer inference."""
+    tip = _same_schema_chain(spark, str(tmp_path), 10)
+    sc = spark.sparkContext
+    sc.setJobGroup("chain-df-build", "chain-df-build")
+    try:
+        full = tip.chain_df(spark)
+        sub = tip.chain_df(spark, range_filter={"k": (25, 55)})
+        jobs = sc.statusTracker().getJobIdsForGroup("chain-df-build")
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(jobs) == []
+    for frame in (full, sub):
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
+    assert full.count() == 100
+    assert sorted(r.k for r in sub.collect()) == list(range(25, 55))
+    # the chain-cache entries carry a fixed-size digest, not the schema
+    e = tip.manifest["chain_cache"][-1]
+    assert len(e["schema_sha1"]) == 40 and "schema" not in e
+
+
+def test_chain_df_mixed_schemas_scan_per_schema(spark, tmp_path):
+    """Links whose schema differs from the tip's are read per distinct
+    schema: strict mode still raises on the mismatch, and
+    allow_missing_columns=True unions them (old rows NULL)."""
+    import pytest as _pytest
+
+    prev = _same_schema_chain(spark, str(tmp_path), 3)
+    for i in range(3, 5):
+        part = spark.range(i * 10, i * 10 + 10).select(
+            F.col("id").alias("k"), (F.col("id") % 3).alias("g"),
+            F.lit("new").alias("extra"))
+        prev = Dataset.write(part, str(tmp_path / f"b{i}"), previous=prev)
+    with _pytest.raises(Exception):
+        prev.chain_df(spark).collect()
+    both = prev.chain_df(spark, allow_missing_columns=True)
+    plan = both._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 2, plan
+    rows = both.collect()
+    assert sorted(r.k for r in rows) == list(range(50))
+    assert {r.extra for r in rows if r.k < 30} == {None}
+    assert {r.extra for r in rows if r.k >= 30} == {"new"}
+
+
 # --- zero-copy column overlay (reference parent= / link_to_here,
 # accelerator/dataset.py:864-941, 292-327; VERDICT r2 #7) ---------------
 

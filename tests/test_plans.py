@@ -300,9 +300,10 @@ def test_entry_graded_subset_is_representative_and_valid():
     """The driver grades queries()[:50]; that prefix must stay exactly
     the curated cross-section and every name must resolve (a rename in
     queries.py would otherwise KeyError at driver time)."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
     qs = e.queries()
     names = list(qs)
@@ -452,3 +453,25 @@ def test_table_schema_cache_reads_identically(spark, tmp_path):
     b = Q._read_table(spark, p)
     assert a.schema == b.schema
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_table_schema_cache_rereads_rewritten_path(spark, tmp_path):
+    """A path regenerated with a different schema must read its NEW
+    columns: a cache keyed on the path alone kept the first schema and
+    read the new column as NULL (and missed it from the frame)."""
+    from pyspark.sql import functions as F
+
+    from accelerator_spark import queries as Q
+
+    p = str(tmp_path / "t.parquet")
+    spark.range(5).select(F.col("id"), F.lit("a").alias("s")).write.parquet(p)
+    Q._TABLE_SCHEMAS.pop(p, None)
+    assert Q._read_table(spark, p).columns == ["id", "s"]
+    assert Q._read_table(spark, p).columns == ["id", "s"]  # cached read
+    spark.range(5).select(
+        F.col("id"), (F.col("id") * 10).alias("x")).write.mode(
+        "overwrite").parquet(p)
+    df = Q._read_table(spark, p)
+    assert df.columns == ["id", "x"]
+    assert sorted(r["x"] for r in df.collect()) == [0, 10, 20, 30, 40]
+    assert Q._read_table(spark, p).columns == ["id", "x"]

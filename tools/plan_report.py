@@ -12,7 +12,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from accelerator_spark import queries as Q
 from accelerator_spark.session import get_spark
@@ -93,9 +94,9 @@ def main() -> None:
             n_errors += 1
             lines.append(f"| {name} | ERROR: {str(e)[:60]} | | | | |")
         print(lines[-1], file=sys.stderr)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
-    print("wrote /root/repo/PLANS.md")
+    print(f"wrote {os.path.join(ROOT, 'PLANS.md')}")
     if n_errors:
         # verify_all's 'exit 0 iff green' contract: a broken plan audit
         # must not ship as ALL GREEN (review r5)
